@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.{RunStamp, RunUuid}
 import graft.schema.{BankSchema, Thresholds}
 
 /** Single-pass error-channel design (SURVEY.md §4.3a).
@@ -15,6 +16,14 @@ import graft.schema.{BankSchema, Thresholds}
   * mirroring the reference's exception short-circuit. The frame is split
   * into (processed, errors) exactly once at the end, so the whole pipeline
   * stays a single whole-stage-codegen'd stage with zero shuffles.
+  *
+  * Stamps (`_ingestion_timestamp`, `_processing_timestamp`,
+  * `processing_timestamp`, the errors' `timestamp`) are taken when the
+  * stage is built, one value per stage for all its rows, so they keep the
+  * stage order. They and the `_batch_id` uuid seed reach generated code
+  * as references ([[graft.functions.RunStamp]],
+  * [[graft.functions.RunUuid]]), so a rebuilt pipeline reuses the
+  * compiled classes of the previous build.
   */
 object Stage {
   val ErrType = "_error_type"
@@ -28,7 +37,8 @@ object Stage {
 
 /** Stage 1 — `ParseCSVFn` (bp.py:109-156): semicolon CSV with RFC-4180
   * quoting, arity=17 check, positional typed coercion, required-field
-  * check, ingestion stamp, parse-error channel.
+  * check, ingestion stamp (taken when the stage is built), parse-error
+  * channel.
   *
   * Coercion-failure semantics: Python `int()`/`float()` raise -> error
   * record. Here `try_cast` yields NULL and the NULL (with a non-null raw
@@ -58,7 +68,7 @@ object Parse {
       keep.map(col) ++ Seq(col(Stage.Raw)) ++
         BankSchema.inputColumns.map(c => col(s"_p.$c").as(c)) ++
         Seq(
-          current_timestamp().as("_ingestion_timestamp"),
+          RunStamp.now().as("_ingestion_timestamp"),
           col("_p._error_type").as(Stage.ErrType),
           col("_p._error_message").as(Stage.ErrMsg)): _*)
   }
@@ -70,7 +80,7 @@ object Parse {
     val raw = to_json(struct(df.columns.map(col): _*))
     df.select(
       Seq(raw.as(Stage.Raw)) ++ df.columns.map(col) ++ Seq(
-        current_timestamp().as("_ingestion_timestamp"),
+        RunStamp.now().as("_ingestion_timestamp"),
         lit(null).cast(StringType).as(Stage.ErrType),
         lit(null).cast(StringType).as(Stage.ErrMsg)): _*)
   }
@@ -106,7 +116,8 @@ object ValidateEnrich {
 }
 
 /** Stage 3 — `CustomerSegmentationFn` (bp.py:217-269): RFM piecewise
-  * scores, JSON score blob, average-score segment, processing stamp.
+  * scores, JSON score blob, average-score segment, processing stamp
+  * (taken when the stage is built).
   */
 object Segment {
   def apply(staged: DataFrame): DataFrame = {
@@ -114,21 +125,22 @@ object Segment {
     val f = BankExprs.frequencyScore(col("previous"))
     val m = BankExprs.monetaryScore(col("balance"))
     staged
-      .withColumn("_processing_timestamp", current_timestamp())
+      .withColumn("_processing_timestamp", RunStamp.now())
       .withColumn("rfm_scores", Stage.guarded(BankExprs.rfmScoresJson(r, f, m)))
       .withColumn("customer_segment",
         Stage.guarded(BankExprs.customerSegment(r, f, m)))
   }
 }
 
-/** Stage 4 — `PrepareForBigQueryFn` (bp.py:271-291): final stamp, fresh
-  * uuid per record (the reference's `_batch_id` really is per-record,
-  * bp.py:280), version tag.
+/** Stage 4 — `PrepareForBigQueryFn` (bp.py:271-291): final stamp (taken
+  * when the stage is built), fresh uuid per record (the reference's
+  * `_batch_id` really is per-record, bp.py:280) from a seed drawn per
+  * build, version tag.
   */
 object Prepare {
   def apply(staged: DataFrame): DataFrame =
     staged
-      .withColumn("processing_timestamp", current_timestamp())
-      .withColumn("_batch_id", Stage.guarded(expr("uuid()")))
+      .withColumn("processing_timestamp", RunStamp.now())
+      .withColumn("_batch_id", Stage.guarded(RunUuid.fresh()))
       .withColumn("_pipeline_version", lit(Thresholds.PipelineVersion))
 }

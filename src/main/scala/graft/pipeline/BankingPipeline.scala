@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.etl._
+import graft.functions.RunStamp
 import graft.schema.{BankSchema, Thresholds}
 
 /** Processed + error outputs of a staged run (the reference's main output
@@ -47,10 +48,6 @@ object BankingPipeline {
   def stagesAfterParse(staged: DataFrame, minAge: Int, maxAge: Int): DataFrame =
     Prepare(Segment(ValidateEnrich(staged, minAge, maxAge)))
 
-  /** Read the reference's native input: semicolon CSV file, 1 header line
-    * (bp.py:345). Kept as a raw-text read so malformed lines reach the
-    * parse stage's error channel instead of being dropped by the reader.
-    */
   /** A header line, identified structurally: the full 17-column header
     * shape — all column names in order, case-insensitive, tolerating the
     * UCI distribution's "-quoting and stray whitespace. Matching the
@@ -59,13 +56,30 @@ object BankingPipeline {
     * the parsing_error channel, like the reference's positional
     * skip_header_lines=1 would. Shared by the batch reader and the
     * streaming ingest path so the rule cannot drift between them.
+    *
+    * The shape match (a regex replace, a lowercase and a compare) runs
+    * only on lines that pass a cheap guard: the first character that is
+    * not a quote or whitespace must be `a` or `A`. The guard is an exact
+    * necessary condition: the shape match strips exactly those characters
+    * (the regex class `[\"\s]`: quote, space, tab, newline, vertical tab,
+    * form feed, carriage return) wherever they stand, so that character
+    * leads the stripped line, and only `a` and `A` lowercase to the
+    * header's leading `a`. It never changes the result; it skips the
+    * costly part for data rows, which lead with a digit.
     */
   private val headerShape: String =
     BankSchema.inputFields.map(_.name).mkString(";")
 
-  def isHeaderLine(line: Column): Column =
-    lower(regexp_replace(line, "[\"\\s]", "")) === headerShape
+  private val headerStripped = "\" \t\n\u000B\f\r"
 
+  def isHeaderLine(line: Column): Column =
+    substring(ltrim(line, headerStripped), 1, 1).isin("a", "A") &&
+      lower(regexp_replace(line, "[\"\\s]", "")) === headerShape
+
+  /** Read the reference's native input: semicolon CSV file, 1 header line
+    * (bp.py:345). Kept as a raw-text read so malformed lines reach the
+    * parse stage's error channel instead of being dropped by the reader.
+    */
   def readCsvLines(spark: SparkSession, path: String): DataFrame = {
     // Drop headers by predicate, not position: no ordering assumption
     // (limit(1) on a multi-split read can return an arbitrary row), one
@@ -90,7 +104,7 @@ object BankingPipeline {
         .as("raw_data"),
       col(Stage.ErrMsg).as("error_message"),
       col(Stage.ErrType).as("error_type"),
-      current_timestamp().as("timestamp")): _*)
+      RunStamp.now().as("timestamp")): _*)
     EtlResult(processed, errors)
   }
 

@@ -21,24 +21,48 @@ final case class EtlConfig(
   maxAge: Int = Thresholds.MaxValidAge)
 
 object EtlConfig {
+  private val Options = Seq("input_path", "output_table", "error_table",
+    "stats_table", "min_age", "max_age")
+
+  /** Strict: every argument is a known `--option` followed by its value.
+    * An unknown or repeated option, an option without a value, a
+    * non-integer age bound and an empty age range each fail with an
+    * IllegalArgumentException that names the option, instead of being
+    * dropped or running with a default.
+    */
   def parse(args: Seq[String]): EtlConfig = {
-    val kv = args.grouped(2).collect {
-      case Seq(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
-    def req(k: String) = kv.getOrElse(k,
-      throw new IllegalArgumentException(s"--$k is required"))
+    def bad(msg: String): Nothing = throw new IllegalArgumentException(msg)
+    @annotation.tailrec
+    def pairs(rest: List[String], acc: Map[String, String]): Map[String, String] =
+      rest match {
+        case Nil => acc
+        case k :: tail =>
+          if (!k.startsWith("--")) bad(s"expected an --option, got '$k'")
+          val name = k.drop(2)
+          if (!Options.contains(name)) bad(s"unknown option $k " +
+            s"(known: ${Options.map("--" + _).mkString(", ")})")
+          if (acc.contains(name)) bad(s"option $k is given twice")
+          tail match {
+            case v :: more if !v.startsWith("--") => pairs(more, acc + (name -> v))
+            case _ => bad(s"option $k has no value")
+          }
+      }
+    val kv = pairs(args.toList, Map.empty)
+    def req(k: String) = kv.getOrElse(k, bad(s"--$k is required"))
+    def age(k: String, default: Int): Int = kv.get(k).fold(default)(v =>
+      v.trim.toIntOption.getOrElse(bad(s"--$k must be an integer, got '$v'")))
     val cfg = EtlConfig(
       inputPath = req("input_path"),
       outputTable = req("output_table"),
       errorTable = req("error_table"),
       statsTable = kv.get("stats_table"),
-      minAge = kv.get("min_age").map(_.toInt)
-        .getOrElse(Thresholds.MinValidAge),
-      maxAge = kv.get("max_age").map(_.toInt)
-        .getOrElse(Thresholds.MaxValidAge))
+      minAge = age("min_age", Thresholds.MinValidAge),
+      maxAge = age("max_age", Thresholds.MaxValidAge))
     require(!cfg.inputPath.startsWith("gs://"),
       "gs:// input paths are not supported (the reference silently " +
         "rewrote them to a local developer path; we reject instead)")
+    if (cfg.minAge > cfg.maxAge) bad(s"--min_age ${cfg.minAge} must not " +
+      s"exceed --max_age ${cfg.maxAge}")
     cfg
   }
 }

@@ -51,7 +51,18 @@ class EndToEndSpec extends SparkSpec {
     assert(processed.columns.contains("customer_segment"))
     // Append semantics (the reference's get-or-create + append sink)
     RunBankingEtl.run(spark, cfg)
-    assert(spark.read.parquet(s"$out/processed").count() == 88)
+    val appended = spark.read.parquet(s"$out/processed")
+    assert(appended.count() == 88)
+    // _batch_id is fresh per row and per run: 88 distinct, none null.
+    val ids = appended.select("_batch_id").collect().map(_.getString(0))
+    assert(ids.length == 88 && !ids.contains(null) && ids.distinct.length == 88)
+    // Every stamp is set in both tables.
+    val stamps = Seq("_ingestion_timestamp", "_processing_timestamp",
+      "processing_timestamp")
+    assert(stamps.forall(c => appended.where(col(c).isNull).count() == 0))
+    val appendedErrors = spark.read.parquet(s"$out/errors")
+    assert(appendedErrors.count() == 12 &&
+      appendedErrors.where(col("timestamp").isNull).count() == 0)
   }
 
   test("S2: custom age bounds are honored") {
@@ -75,6 +86,45 @@ class EndToEndSpec extends SparkSpec {
       EtlConfig.parse(Seq("--input_path", "x.csv"))
     }
     assert(e.getMessage.contains("--output_table"))
+  }
+
+  private val required = Seq("--input_path", "in.csv",
+    "--output_table", "t", "--error_table", "e")
+
+  private def parseError(args: String*): String =
+    intercept[IllegalArgumentException](EtlConfig.parse(args)).getMessage
+
+  test("S2: an unknown option is rejected by name, not ignored") {
+    val msg = parseError(required ++ Seq("--max_agee", "60"): _*)
+    assert(msg.contains("unknown option --max_agee"))
+  }
+
+  test("S2: an option without a value is rejected by name") {
+    assert(parseError(required :+ "--min_age": _*)
+      .contains("option --min_age has no value"))
+    assert(parseError("--input_path", "--output_table", "t",
+      "--error_table", "e").contains("option --input_path has no value"))
+  }
+
+  test("S2: a non-integer age bound is rejected by name") {
+    assert(parseError(required ++ Seq("--min_age", "x"): _*)
+      .contains("--min_age must be an integer, got 'x'"))
+    assert(parseError(required ++ Seq("--max_age", "6.5"): _*)
+      .contains("--max_age must be an integer, got '6.5'"))
+  }
+
+  test("S2: min_age above max_age is rejected") {
+    assert(parseError(required ++ Seq("--min_age", "60", "--max_age", "18"): _*)
+      .contains("--min_age 60 must not exceed --max_age 18"))
+    val cfg = EtlConfig.parse(required ++ Seq("--min_age", "30", "--max_age", "30"))
+    assert(cfg.minAge == 30 && cfg.maxAge == 30)
+  }
+
+  test("S2: a repeated option or a bare argument is rejected") {
+    assert(parseError(required ++ Seq("--error_table", "e2"): _*)
+      .contains("option --error_table is given twice"))
+    assert(parseError(required :+ "stray": _*)
+      .contains("expected an --option, got 'stray'"))
   }
 
   test("scoring breakpoints from fixture match the reference tables") {

@@ -153,4 +153,75 @@ class PipelineSpec extends SparkSpec {
     val plan = res.processed.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
   }
+
+  test("header guard: guarded predicate equals the full shape match") {
+    // The unguarded rule the guard sits in front of.
+    val header = BankSchema.inputColumns.mkString(";")
+    def unguarded(c: org.apache.spark.sql.Column) =
+      lower(regexp_replace(c, "[\"\\s]", "")) === header
+    val quoted = header.split(";").map("\"" + _ + "\"").mkString(";")
+    val fixed = Seq(
+      header, quoted, header.toUpperCase, "Age;JOB" + header.drop(7),
+      "  " + header, "\t\"" + header, "\r" + quoted, quoted + "\r",
+      "\u000B\f " + header, "a g e ;" + header.drop(4), // embedded whitespace
+      "\"a\"\"g\"e" + header.drop(3), " \" A\tGE\"" + header.drop(3),
+      header.replace(";", " ; "), "", " ", "\"", "\r", "\t\"\"",
+      "age;oops;truncated", "Age" + valid.drop(2), "age", "a",
+      header + ";extra", header.dropRight(2), // 17 names or nothing
+      "\u00A0" + header, "\uFEFF" + header, // not stripped: never a header
+      "\u00C5ge" + header.drop(3), valid, "\"42\";" + valid.drop(3))
+    // Random spellings: whitespace/quotes inserted anywhere, random case,
+    // and every third one damaged by one deleted or replaced character.
+    val rnd = new scala.util.Random(7)
+    val pads = Seq(" ", "\t", "\"", "\r", "\n", "\u000B", "\f", "  ")
+    val randomized = (1 to 300).map { i =>
+      val sb = new StringBuilder
+      header.foreach { ch =>
+        while (rnd.nextInt(6) == 0) sb ++= pads(rnd.nextInt(pads.size))
+        sb += (if (rnd.nextBoolean()) ch.toUpper else ch)
+      }
+      if (rnd.nextBoolean()) sb ++= pads(rnd.nextInt(pads.size))
+      val s = sb.toString
+      if (i % 3 != 0) s else {
+        val at = rnd.nextInt(s.length)
+        if (rnd.nextBoolean()) s.patch(at, "", 1)
+        else s.patch(at, rnd.nextPrintableChar().toString, 1)
+      }
+    }
+    val lines = (fixed ++ randomized).toDF("value")
+    val got = lines.select(col("value"),
+      BankingPipeline.isHeaderLine(col("value")),
+      unguarded(col("value"))).collect()
+    val diff = got.filter(r => r.getBoolean(1) != r.getBoolean(2))
+    assert(diff.isEmpty, diff.map(_.getString(0)).mkString("\n"))
+    // Both outcomes are exercised, including the fixed headers.
+    val headers = got.count(_.getBoolean(2))
+    assert(headers > 100 && got.length - headers > 50, s"$headers headers")
+    assert(got.take(13).forall(_.getBoolean(1)))
+  }
+
+  test("batch ids: non-null, one per row, fresh per build") {
+    val lines = Seq.fill(200)(valid).toDF("value").repartition(4)
+    def ids = BankingPipeline.fromLines(lines).processed
+      .select("_batch_id").as[String].collect().toSeq
+    val (a, b) = (ids, ids)
+    assert(a.size == 200 && b.size == 200)
+    assert(a.forall(_ != null) && b.forall(_ != null))
+    assert((a ++ b).distinct.size == 400)
+    assert(a.forall(java.util.UUID.fromString(_).version() == 4))
+  }
+
+  test("stamps: non-null in both tables, in stage order") {
+    val res = BankingPipeline.fromLines(Seq(valid, "bad;line",
+      valid.replaceFirst("^42", "150")).toDF("value"))
+    val p = res.processed.select("_ingestion_timestamp",
+      "_processing_timestamp", "processing_timestamp").collect()
+    assert(p.length == 1)
+    val Seq(ingest, segment, prepare) = (0 to 2).map(p.head.getTimestamp)
+    assert(ingest != null && segment != null && prepare != null)
+    assert(!ingest.after(segment) && !segment.after(prepare))
+    val e = res.errors.select("timestamp").collect()
+    assert(e.length == 2 && e.forall(!_.isNullAt(0)))
+    assert(e.forall(r => !prepare.after(r.getTimestamp(0))))
+  }
 }
